@@ -1,0 +1,1 @@
+"""The sparkwatch benchmark: ``python3 perfbench/run.py --help``."""
