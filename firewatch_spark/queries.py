@@ -1147,8 +1147,6 @@ def streaming_warc_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources import warc as warc_src
 
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     tmp = None
     try:
         data_dir = _write_warc_dump(spark, sf_dir, "fw_warc_stream_")
@@ -1178,7 +1176,6 @@ def streaming_warc_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.stop()
         result = spark.read.parquet(out_dir).drop("batch_id").localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
     return result
@@ -2747,8 +2744,6 @@ def streaming_recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     tmp = None
     try:
         tmp = tempfile.mkdtemp(prefix="fw_recrawl_stream_")
@@ -2814,7 +2809,6 @@ def streaming_recrawl_schedule_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.stop()
         result = spark.read.parquet(out_dir).drop("batch_id").localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
     return result
@@ -6160,8 +6154,6 @@ def streaming_weighted_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.replay import write_replay_chunks
 
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     tmp = None
     try:
         docs = _tbl(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -6205,7 +6197,6 @@ def streaming_weighted_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
     return result
@@ -7185,8 +7176,6 @@ def streaming_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.replay import write_replay_chunks
 
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     tmp = None
     try:
         emb = _tbl(spark, sf_dir, "embeddings")
@@ -7226,7 +7215,6 @@ def streaming_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.stop()
         results = spark.read.parquet(out_dir).drop("batch_id").localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
     return results
@@ -8650,8 +8638,6 @@ def streaming_sketch_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.replay import write_replay_chunks
 
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     tmp = None
     try:
         docs = _tbl(spark, sf_dir, "documents").select("doc_id", "text")
@@ -8688,7 +8674,6 @@ def streaming_sketch_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
     toks = (
@@ -9307,8 +9292,6 @@ def streaming_blocklist_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     tmp = None
     try:
         hosts = (
@@ -9357,7 +9340,6 @@ def streaming_blocklist_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(out_dir).drop("batch_id").localCheckpoint()
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
     return result.select(
@@ -9978,10 +9960,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.replay import write_replay_chunks
 
-    # bound per-micro-batch shuffle cost on a vanilla 200-partition
-    # session (same save/restore pattern as streaming_session_parity)
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     tmp = None
     try:
         docs = _tbl(spark, sf_dir, "documents").select("doc_id", "text")
@@ -10032,7 +10010,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # residue (VERDICT r6 #3)
         verdicts = spark.read.parquet(out_dir).drop("batch_id").localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         if tmp is not None:
             shutil.rmtree(tmp, ignore_errors=True)
     return verdicts
@@ -11227,14 +11204,6 @@ def streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.replay import write_replay_chunks
     from .streaming.session_state import sessionize_stream
 
-    # stateful stage cost scales with state-store instances (= shuffle
-    # partitions); a vanilla session's 200 is pure overhead at sf
-    # scale, and for the fixture's ~150 keys 16 instances measure ~25%
-    # faster than 32 (fewer store commits per micro-batch).  Save/
-    # restore the prior value so the setting cannot leak into later
-    # registry queries in the same session (ADVICE r2).
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     tmp = None
     try:
         ev = _with_surrogate(_tbl(spark, sf_dir, "events")).select(
@@ -11287,7 +11256,6 @@ def streaming_session_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         query.stop()  # don't leak a running query into the driver session
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         # results live in the memory sink, not the replay files — safe
         # to drop the temp dir here (VERDICT r6 #3: no /tmp/fw_* residue)
         if tmp is not None:
@@ -11417,11 +11385,6 @@ def streaming_ep2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.replay import write_replay_chunks
     from .streaming.stateful_pipeline import fire_detection_stream
 
-    # see streaming_session_parity: bound state-store instance count
-    # (16 for ~150 keys), and restore the prior value so nothing leaks
-    # (ADVICE r2)
-    prior_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     tmp = None
     try:
         ev = _tbl(spark, sf_dir, "events").select(
@@ -11459,7 +11422,6 @@ def streaming_ep2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         query.stop()  # don't leak a running query into the driver session
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior_sp)
         # results live in the memory sink — the replay/checkpoint temp
         # dir can go (VERDICT r6 #3: no /tmp/fw_* residue)
         if tmp is not None:

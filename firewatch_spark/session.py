@@ -3,9 +3,11 @@
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default local[*]);
 the same config block is what we would ship to a 1000-executor cluster —
 AQE on (runtime re-plan, skew-join splitting, partition coalescing),
-explicit shuffle-partition sizing, Arrow enabled for the pandas-UDF path,
-and nanosecond parquet timestamps read as long (the synthetic testdata is
-written with TIMESTAMP(NANOS), which Spark does not support natively).
+explicit shuffle-partition sizing (a batch fan-out for AQE to coalesce,
+and one state-store partition per core for the streams), Arrow enabled
+for the pandas-UDF path, and nanosecond parquet timestamps read as long
+(the synthetic testdata is written with TIMESTAMP(NANOS), which Spark
+does not support natively).
 """
 
 from __future__ import annotations
@@ -17,23 +19,20 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "firewatch-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    At 100 TB the same knobs apply, with shuffle partitions sized to
-    ~128 MB of post-shuffle data per task; AQE coalesces the rest.
+    Batch shuffles fan out to the AQE initial partition count and
+    streams size their state stores to the cores; an explicit
+    ``spark.sql.shuffle.partitions`` in ``extra_conf`` wins.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         # testdata parquet uses TIMESTAMP(NANOS); read as bigint nanos.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -52,9 +51,7 @@ def get_spark(
         # one task locally, while at 100 TB the same rule yields
         # thousands of ~64 MB partitions — the same bytes-per-task
         # target either way (guide §2.2; Spark's own docs recommend
-        # false on busy clusters).  spark.sql.shuffle.partitions stays
-        # the INITIAL fan-out (env SPARK_GRAFT_SHUFFLE; raise it on a
-        # real cluster — AQE only ever merges, it never splits).
+        # false on busy clusters).
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
@@ -62,6 +59,14 @@ def get_spark(
         .config(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
+        )
+        # The INITIAL fan-out of every batch shuffle (env
+        # SPARK_GRAFT_SHUFFLE; at 100 TB size it to ~128 MB per task —
+        # AQE only ever merges, it never splits).  With AQE coalescing
+        # on, Spark reads it in place of spark.sql.shuffle.partitions.
+        .config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
         )
         # Arrow batches for the pandas-UDF path (inference / media ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -78,24 +83,15 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # Micro-batches run with AQE off, so a stateful stream runs one
+    # state-store task per spark.sql.shuffle.partitions per batch, each
+    # a fixed load + commit whether or not it holds a key, and the
+    # count is frozen into the checkpoint at first start: use the cores.
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
+        )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load every testdata table as a DataFrame keyed by name."""
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}

@@ -9,13 +9,12 @@ from firewatch_spark.streaming.stateful_pipeline import fire_detection_stream
 from tests.conftest import rows
 
 
-def _run(spark, tmp_path, pdf, every_n, n_files):
+def _write_chunks(data_dir, pdf, n_files):
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    data_dir = tmp_path / "in"
     data_dir.mkdir()
     per = (len(pdf) + n_files - 1) // n_files
     written = []
@@ -32,24 +31,35 @@ def _run(spark, tmp_path, pdf, every_n, n_files):
     base = int(os.path.getmtime(written[0]))
     for i, p in enumerate(written):
         os.utime(p, (base + i, base + i))
+
+
+def _drain(spark, tmp_path, every_n):
+    """Drain ``tmp_path/in`` into a parquet file sink at ``tmp_path/out``
+    (unlike the memory sink, it can restart on its checkpoint)."""
     stream = (
         spark.readStream.schema("video_id string, frame_number long")
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(data_dir))
+        .parquet(str(tmp_path / "in"))
     )
     # NoTimeout: availableNow never terminates with an armed
     # processing-time timer; these tests only assert gap/frame rows
     out = fire_detection_stream(
         stream, gap=300, inference_every_n=every_n, timeout_ms=None
     )
-    name = f"ep2_{abs(hash(str(tmp_path))) % 10_000_000}"
     q = (
-        out.writeStream.format("memory").queryName(name).outputMode("append")
+        out.writeStream.format("parquet").outputMode("append")
+        .option("path", str(tmp_path / "out"))
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True).start()
     )
     assert q.awaitTermination(120), "bounded replay did not drain in 120s"
-    return spark.sql(f"SELECT * FROM {name}")
+    return q
+
+
+def _run(spark, tmp_path, pdf, every_n, n_files):
+    _write_chunks(tmp_path / "in", pdf, n_files)
+    _drain(spark, tmp_path, every_n)
+    return spark.read.parquet(str(tmp_path / "out"))
 
 
 def test_cadence_counter_survives_batch_boundary(spark, tmp_path):
@@ -120,3 +130,47 @@ def test_frame_and_session_rows_consistent(spark, tmp_path):
     s1_frames = [r for r in frames if r["session_id"] == 1]
     assert s1["fire_count"] == sum(r["has_fire"] for r in s1_frames)
     assert s1["max_fire_probability"] == max(r["fire_probability"] for r in s1_frames)
+
+
+def test_checkpoint_restart_keeps_its_state_partition_count(spark, tmp_path):
+    """A stateful query's partition count is frozen into its checkpoint
+    at the first start: drained over file 1 at 8 partitions, then
+    restarted over files 1-2 with the session at 4, the query still
+    runs 8 state stores, and its two runs together emit exactly the
+    rows of an uninterrupted run — so checkpoints written under an
+    older session default keep working."""
+    import os
+    from collections import Counter
+
+    import pandas as pd
+
+    seqs = list(range(20)) + [400 + i for i in range(10)]  # gap closes session 1
+    pdf = pd.DataFrame(
+        [(f"v{k}", s) for s in seqs for k in range(6)],
+        columns=["video_id", "frame_number"],
+    )  # frame-major: every video's first session straddles the two files
+    whole = tmp_path / "whole"
+    whole.mkdir()
+    expected = Counter(map(tuple, _run(spark, whole, pdf, 3, 2).collect()))
+
+    _write_chunks(tmp_path / "staged", pdf, 2)
+    (tmp_path / "in").mkdir()
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n_parts, chunk in [(8, "c_000"), (4, "c_001")]:
+            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+            os.rename(
+                tmp_path / "staged" / f"{chunk}.parquet",
+                tmp_path / "in" / f"{chunk}.parquet",
+            )
+            q = _drain(spark, tmp_path, 3)
+        got = Counter(map(tuple, spark.read.parquet(str(tmp_path / "out")).collect()))
+        counts = {
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        }
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert got == expected
+    assert counts == {8}
